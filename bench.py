@@ -5,17 +5,6 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
   {"metric": ..., "value": docs_per_sec, "unit": "sec"?, "queries": {...}, "sf": ...}
 
-`--scaling` mode: run the identical extraction job at N and 4N local
-cores over the same synthesized corpus (spawned as subprocesses so
-each gets a fresh JVM with its own core count) and report throughputs
-+ scaling efficiency — the sandbox evidence for the north rule's
-N -> 4N criterion. Results accumulate into BENCH/scaling.json.
-
-`--pair NAME` mode: run ONE scaling pair (large leg first, then the
-small leg) and record its minima + same-window paired sample. Sized to
-fit inside a single quiet window on this shared box (~3-6 min), it is
-the unit the background harvester schedules when load drops.
-
 Round-4 evidence modes (each writes its own BENCH/*.json):
 `--bpe`        1200-rule + 10k byte-level BPE encode vs the regex counter
 `--recall`     ANN recall@k + speedup: IVF nprobe sweep, sign-LSH (task 6)
@@ -27,7 +16,6 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -98,9 +86,8 @@ def run_bench() -> None:
     bench (a) records the 1-min system load around every query so each
     number is self-explaining, and (b) min-merges per-query timings into
     BENCH/bench_best.json across invocations — the printed ``queries``/
-    ``value`` are the accumulated least-interfered estimates (the same
-    accumulate-the-minimum protocol --scaling already uses), while
-    ``queries_fresh``/``value_fresh`` are this invocation alone.
+    ``value`` are the accumulated least-interfered estimates, while
+    ``queries_fresh``/``extract_fresh`` are this invocation alone.
     """
     from tackle4losscontentextraction_spark.plans.queries import SPARK_QUERIES
     from tackle4losscontentextraction_spark.session import get_spark
@@ -132,35 +119,22 @@ def run_bench() -> None:
     # the 10^12 design point; the tiny sf dir is overhead-dominated)
     from pyspark.sql import functions as SF
 
-    from tackle4losscontentextraction_spark.operators import extraction, extraction_arrow
+    from tackle4losscontentextraction_spark.operators import extraction
     from tackle4losscontentextraction_spark.sources import synth
 
     # 600k default: at 200k the ~0.5 s fixed cost (plan + task launch +
     # cache probe) is ~20% of the measured region, understating the
     # steady-state throughput the 10^12-doc design point cares about;
-    # at 600k it is <5% and the per-rep timing matches the --scaling
-    # mode's local[32] legs (same job, same corpus size).
+    # at 600k it is <5%.
     n_big = int(os.environ.get("T4L_BENCH_DOCS", "600000"))
     big = synth.synth_docs(spark, n_big, partitions=max(4 * CPUS, 64)).cache()
     big.count()
-    # the Catalyst HOF path and the Arrow mapInPandas twin are
-    # row-for-row equal implementations of the same operator; a user
-    # runs whichever is faster on their hardware, so the headline is
-    # the better of the two. Reps alternate impls, which also
-    # interleaves against co-tenant load bursts on this shared box.
-    best = {"catalyst": 1e18, "arrow": 1e18}
-    impls = {"catalyst": extraction.extract, "arrow": extraction_arrow.extract_arrow}
+    best = 1e18
     for _ in range(4):
-        for name, fn in impls.items():
-            t0 = time.perf_counter()
-            fn(big).agg(SF.count("*"), SF.sum("content_chars")).collect()
-            best[name] = min(best[name], time.perf_counter() - t0)
+        t0 = time.perf_counter()
+        extraction.extract(big).agg(SF.count("*"), SF.sum("content_chars")).collect()
+        best = min(best, time.perf_counter() - t0)
     extract_load = _load1()
-    fresh = {
-        "queries": timings,
-        "extract_sec_catalyst": round(best["catalyst"], 3),
-        "extract_sec_arrow": round(best["arrow"], 3),
-    }
 
     # --- min-merge with the accumulated least-interfered estimates ---
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
@@ -178,10 +152,8 @@ def run_bench() -> None:
     for name, sec in timings.items():
         prior = acc["queries"].get(name)
         acc["queries"][name] = min(prior, sec) if prior is not None else sec
-    for impl in ("catalyst", "arrow"):
-        k = f"extract_sec_{impl}"
-        prior = acc.get(k)
-        acc[k] = round(min(prior, best[impl]) if prior is not None else best[impl], 3)
+    prior = acc.get("extract_sec")
+    acc["extract_sec"] = round(min(prior, best) if prior is not None else best, 3)
     acc["invocations"] = acc.get("invocations", 0) + 1
     acc_all[acc_key] = acc
     try:
@@ -191,13 +163,12 @@ def run_bench() -> None:
     except OSError:
         pass  # read-only checkout: fresh numbers still printed below
 
-    best_impl = min(("catalyst", "arrow"), key=lambda i: acc[f"extract_sec_{i}"])
-    extract_sec = acc[f"extract_sec_{best_impl}"]
+    extract_sec = acc["extract_sec"]
     docs_per_sec = round(n_big / extract_sec, 1)
     total = round(sum(acc["queries"].values()), 3)
     print(json.dumps({
         "metric": "documents/sec extraction throughput (full extraction over "
-                  f"{n_big}-doc synthetic span corpus, best impl; min accumulated "
+                  f"{n_big}-doc synthetic span corpus; min accumulated "
                   f"over {acc['invocations']} invocations x 4 reps — shared box, "
                   "see queries_fresh/load_1min for this run alone)",
         "value": docs_per_sec,
@@ -207,15 +178,8 @@ def run_bench() -> None:
         "n_docs": n_docs,
         "bench_docs": n_big,
         "extract_sec": extract_sec,
-        "extract_impl": best_impl,
-        "extract_sec_catalyst": acc["extract_sec_catalyst"],
-        "extract_sec_arrow": acc["extract_sec_arrow"],
-        "queries_fresh": fresh["queries"],
-        "extract_fresh": {
-            "catalyst": fresh["extract_sec_catalyst"],
-            "arrow": fresh["extract_sec_arrow"],
-            "load_1min": extract_load,
-        },
+        "queries_fresh": timings,
+        "extract_fresh": {"extract_sec": round(best, 3), "load_1min": extract_load},
         "load_1min": loads,
         "accumulated_invocations": acc["invocations"],
         "code_key": code_key,
@@ -223,50 +187,6 @@ def run_bench() -> None:
         "cpus": CPUS,
     }))
     spark.stop()
-
-
-def run_one_scale(cores: int, n_docs: int, reps: int = 0, impl: str = "catalyst") -> dict:
-    """Child process entry: time the extraction job at a parallelism.
-
-    This sandbox is a SHARED box (co-tenant load causes 5-10x noise), so
-    we run `reps` identical timed jobs in one JVM (steady-state JIT) and
-    report the minimum — the least-interfered estimate. reps=0 picks
-    automatically: 3 normally, 2 when the expected quiet wall time
-    exceeds ~25 s (long legs must still fit a quiet window; the
-    cross-invocation min-merge supplies the missing repetitions).
-
-    impl="arrow" times the mapInPandas twin instead — a second,
-    independent scaling signal whose per-core work runs in separate
-    Python workers (no shared-JVM allocation contention)."""
-    from pyspark.sql import functions as F
-
-    from tackle4losscontentextraction_spark.operators import extraction, extraction_arrow
-    from tackle4losscontentextraction_spark.session import get_spark
-    from tackle4losscontentextraction_spark.sources import synth
-
-    if reps <= 0:
-        # ~4500 docs/s/core is the measured quiet-box catalyst rate
-        reps = 2 if n_docs / (cores * 4500.0) > 25 else 3
-    spark = get_spark(app_name=f"t4l-scale-{cores}", cores=cores,
-                      shuffle_partitions=max(cores, 16))
-    spark.sparkContext.setLogLevel("ERROR")
-    # fixed work; partition count sized so the 4N config has 4x
-    # schedulable tasks and — for the >=20 s legs — enough waves (16+
-    # at 32 cores) that one straggler task cannot dominate the tail
-    parts = 128 if n_docs <= 600_000 else 512
-    docs = synth.synth_docs(spark, n_docs, partitions=parts).cache()
-    docs.count()  # materialize input outside the timed region
-    fn = extraction_arrow.extract_arrow if impl == "arrow" else extraction.extract
-    best, n = 1e18, 0
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        out = fn(docs)
-        n = out.agg(F.count("*").alias("n"), F.sum("content_chars").alias("_force")).collect()[0].n
-        best = min(best, time.perf_counter() - t0)
-    spark.stop()
-    return {"cores": cores, "n_docs": n, "sec": round(best, 3),
-            "docs_per_sec": round(n / best, 1), "reps": reps, "impl": impl,
-            "load_1min": _load1()}
 
 
 def run_streaming_bench(n_docs: int = 200_000, n_files: int = 48) -> None:
@@ -791,209 +711,8 @@ def run_bpe_bench(n_docs: int = 600_000) -> None:
     print(json.dumps(out))
 
 
-# The scaling pairs: (name, impl, small_cores, large_cores, n_docs).
-# Corpus sizes are chosen so the LARGE leg runs >=18 s on a quiet box
-# (measured quiet rate ~4500-5400 docs/s/core): at r3's 5 s legs the
-# fixed per-job costs (planning, task launch, codegen, Python worker
-# spin-up) were ~a fifth of the measurement and biased wide-pair
-# efficiency down. Order = harvest priority: the pairs still short of
-# the 0.8 target run first when a quiet window opens.
-PAIRS = [
-    ("4_to_16", "catalyst", 4, 16, 1_200_000),
-    ("8_to_32", "catalyst", 8, 32, 2_400_000),
-    ("arrow_8_to_32", "arrow", 8, 32, 2_400_000),
-    ("2_to_8", "catalyst", 2, 8, 300_000),
-]
-
-# corpus sizes the r1-r3 record used: paired samples recorded before
-# per-sample n_docs stamping are migrated with these sizes so they stay
-# in the history but can never be reported as a reading for a pair
-# whose corpus has since grown (their ratio was measured on different
-# work — mixing them with the new floors would be meaningless).
-LEGACY_SAMPLE_N = {"4_to_16": 300_000, "2_to_8": 300_000,
-                   "8_to_32": 600_000, "arrow_8_to_32": 600_000}
-
-
-def run_scaling(rounds: int = 1, only: str | None = None) -> None:
-    """N -> 4N scaling evidence over the PAIRS table, fixed work per pair:
-
-      - local[2] -> local[8] and local[4] -> local[16] fit inside the
-        shared box's free capacity -> clean signal of CODE scaling
-      - local[8] -> local[32]: the 32-core config is physically capped
-        by co-tenant load of ~4-10 cores; needs a rare deep-quiet window
-
-    Child runs interleave and the per-(cores,n_docs) minimum accumulates
-    across invocations to harvest quiet windows.
-
-    Two efficiency readings per pair are reported:
-
-    - global-minima ratio: best-ever leg times, possibly from different
-      windows. Biased DOWN whenever the small leg caught a quieter
-      window than the big one (the small leg only needs N free cores,
-      so it reaches its quiet-box truth much sooner).
-    - paired (same-invocation): both legs measured back-to-back in ONE
-      window, ratio taken within it. All same-window samples are kept;
-      the reported paired efficiency is the best ratio among ADMISSIBLE
-      windows — those whose small-leg time is within 20% of that leg's
-      global minimum. Without the admissibility gate a max-over-windows
-      would favor windows where the small leg was contended (slow
-      denominator -> inflated ratio); with it, both legs of the
-      reported window are near their quiet-box truth, which is the
-      measurement a dedicated two-cluster run would give.
-    """
-    best: dict[tuple[str, int, int], dict] = {}
-    paired: dict[str, list] = {}
-    prior_path = os.path.join(REPO, "BENCH", "scaling.json")
-    if os.path.exists(prior_path):
-        try:
-            with open(prior_path) as f:
-                prior = json.load(f)
-            for res in prior.get("results", {}).values():
-                best[(res.get("impl", "catalyst"), res["cores"], res["n_docs"])] = res
-            for name, p in prior.get("paired_samples", prior.get("paired", {})).items():
-                # accept both the sample-list format and the older
-                # single-best format (converted to a one-sample list)
-                samples = p if isinstance(p, list) else [{
-                    "efficiency": p["efficiency"],
-                    "small_sec": p["small"]["sec"],
-                    "small_load": p["small"].get("load_1min"),
-                    "large_sec": p["large"]["sec"],
-                    "large_load": p["large"].get("load_1min"),
-                }]
-                for s in samples:  # migrate pre-stamping samples
-                    s.setdefault("n_docs", LEGACY_SAMPLE_N.get(name))
-                paired[name] = samples
-        except (json.JSONDecodeError, KeyError):
-            pass
-
-    pairs = [p for p in PAIRS if only is None or p[0] == only]
-    if not pairs:
-        raise SystemExit(f"unknown pair {only!r}; know {[p[0] for p in PAIRS]}")
-    # within every pair the LARGE leg runs before the small one: quiet
-    # windows here often close within minutes, the large leg is the one
-    # that needs the whole window, and the small leg degrades
-    # gracefully under whatever load returns.
-    plan = [(impl, c, n) for _, impl, ca, cb, n in pairs for c in (cb, ca)]
-    for _ in range(rounds):
-        fresh: dict[tuple[str, int, int], dict] = {}
-        for impl, cores, n in plan:
-            try:
-                r = subprocess.run(
-                    [sys.executable, __file__, "--one-scale", str(cores), str(n), impl],
-                    capture_output=True, text=True, cwd=REPO, timeout=1800,
-                )
-                lines = [ln for ln in r.stdout.strip().splitlines() if ln.startswith("{")]
-                res = json.loads(lines[-1])
-            except (subprocess.TimeoutExpired, IndexError, json.JSONDecodeError) as e:
-                # a leg that died (OOM'd executor, co-tenant kill, timeout)
-                # must not abort the whole pass — skip it; the
-                # cross-invocation min-merge supplies the missing sample
-                err = ""
-                stderr = getattr(e, "stderr", None) or (
-                    r.stderr if isinstance(e, (IndexError, json.JSONDecodeError)) else None)
-                if stderr:
-                    err = " | stderr: " + " ".join(str(stderr)[-400:].split())
-                print(f"[scaling] leg {impl} cores={cores} n={n} failed: "
-                      f"{type(e).__name__}{err}", file=sys.stderr)
-                continue
-            key = (impl, cores, n)
-            fresh[key] = res
-            if key not in best or res["sec"] < best[key]["sec"]:
-                best[key] = res
-        # same-window (paired) efficiency samples for each pair
-        for name, impl, ca, cb, n in pairs:
-            a, b = fresh.get((impl, ca, n)), fresh.get((impl, cb, n))
-            if not a or not b:
-                continue
-            paired.setdefault(name, []).append({
-                "efficiency": round(b["docs_per_sec"] / (4 * a["docs_per_sec"]), 3),
-                "n_docs": n,
-                "small_sec": a["sec"], "small_load": a.get("load_1min"),
-                "large_sec": b["sec"], "large_load": b.get("load_1min"),
-            })
-            paired[name] = paired[name][-60:]  # bound the stored history
-
-    def _eff(impl, ca, cb, n):
-        a, b = best.get((impl, ca, n)), best.get((impl, cb, n))
-        if not a or not b:
-            return None
-        return round(b["docs_per_sec"] / (4 * a["docs_per_sec"]), 3)
-
-    eff = {name: _eff(impl, ca, cb, n) for name, impl, ca, cb, n in PAIRS}
-
-    # best ADMISSIBLE paired sample per pair: measured on the pair's
-    # CURRENT corpus size, and with the small leg within 5% of its
-    # global-minimum time — else the window's slow denominator inflates
-    # the ratio (round 3 used 20%, which allowed readings up to 1.2x
-    # the truth; the r4 tightening caps the inflation at 1.05x, which
-    # is exactly the settle band's upper edge). Each reported pair also
-    # carries eff_floor = small_floor / (4 * large_sec): the CONSERVATIVE
-    # reading that charges the window's best large leg against the
-    # quietest small leg ever seen — it can only understate.
-    paired_best: dict[str, dict] = {}
-    for name, impl, ca, cb, n in PAIRS:
-        floor = best.get((impl, ca, n), {}).get("sec")
-        if floor is None:
-            continue
-        cur = [s for s in paired.get(name, []) if s.get("n_docs") == n]
-        admissible = [s for s in cur if s["small_sec"] <= 1.05 * floor]
-        if admissible:
-            top = max(admissible, key=lambda s: s["efficiency"])
-            eff_floor = round(floor / (4 * top["large_sec"]), 3)
-            paired_best[name] = {**top, "admissible_of": len(cur),
-                                 "small_floor_sec": floor,
-                                 "efficiency_floor": eff_floor}
-        elif cur:
-            # no admissible window yet: report the conservative reading
-            # of the window with the best large leg, flagged as such
-            top = min(cur, key=lambda s: s["large_sec"])
-            paired_best[name] = {
-                "efficiency": round(floor / (4 * top["large_sec"]), 3),
-                "conservative_floor_reading": True,
-                "n_docs": n, "small_sec": None,
-                "small_load": None, "large_sec": top["large_sec"],
-                "large_load": top["large_load"],
-                "admissible_of": len(cur), "small_floor_sec": floor,
-            }
-    report = {
-        "metric": "N->4N scaling efficiency (fixed work per pair, min over interleaved reps)",
-        "results": {
-            (f"local{c}_n{n}" if i == "catalyst" else f"arrow{c}_n{n}"): res
-            for (i, c, n), res in sorted(best.items(), key=str)
-        },
-        **{f"efficiency_{name}": e for name, e in eff.items()
-           if not name.startswith("arrow")},
-        "arrow_efficiency_8_to_32": eff.get("arrow_8_to_32"),
-        "pair_sizes": {name: n for name, _, _, _, n in PAIRS},
-        "paired": paired_best,
-        "paired_samples": paired,
-        "target": 0.8,
-        **{f"pass_{name}": bool(eff.get(name) and eff[name] >= 0.8)
-           for name, *_ in PAIRS if not name.startswith("arrow")},
-        "paired_pass": {n: bool(p["efficiency"] >= 0.8) for n, p in paired_best.items()},
-        "cotenant_load_avg": _load1(),
-        "note": "shared machine: co-tenant load caps the 16/32-core configs; "
-                "the 2->8 and 4->16 pairs fit in free capacity when a quiet "
-                "window lands (per-leg load_1min recorded with each minimum). "
-                "Corpus sizes per pair grew in r4 so the large leg runs >=18 s "
-                "quiet; pre-r4 samples remain in paired_samples (n_docs stamp) "
-                "but only current-size samples are reported.",
-    }
-    print(json.dumps(report))
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    with open(os.path.join(REPO, "BENCH", "scaling.json"), "w") as f:
-        json.dump(report, f, indent=2)
-
-
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "--one-scale":
-        impl = sys.argv[4] if len(sys.argv) > 4 else "catalyst"
-        print(json.dumps(run_one_scale(int(sys.argv[2]), int(sys.argv[3]), impl=impl)))
-    elif len(sys.argv) > 1 and sys.argv[1] == "--scaling":
-        run_scaling(rounds=int(sys.argv[2]) if len(sys.argv) > 2 else 2)
-    elif len(sys.argv) > 1 and sys.argv[1] == "--pair":
-        run_scaling(rounds=1, only=sys.argv[2])
-    elif len(sys.argv) > 1 and sys.argv[1] == "--bpe":
+    if len(sys.argv) > 1 and sys.argv[1] == "--bpe":
         run_bpe_bench(int(sys.argv[2]) if len(sys.argv) > 2 else 600_000)
     elif len(sys.argv) > 1 and sys.argv[1] == "--recall":
         run_recall_bench(int(sys.argv[2]) if len(sys.argv) > 2 else 100_000)

@@ -8,8 +8,8 @@ Modes:
                           EXEC time (same _count_rows shape bench.py
                           times), plus .explain("formatted") captured to
                           plans/r06/<name>_<tag>.txt
-  --extract [n_docs]    : the headline extraction job (catalyst + arrow)
-                          over the synth corpus, noop-sink isolated
+  --extract [n_docs]    : the headline extraction job over the synth
+                          corpus, noop-sink isolated
   --tag before|after    : suffix for the captured plan files
 """
 
@@ -103,7 +103,7 @@ def run_queries(names: list[str], tag: str, reps: int = 3) -> None:
 def run_extract(n_docs: int, tag: str, reps: int = 4) -> None:
     from pyspark.sql import functions as SF
 
-    from tackle4losscontentextraction_spark.operators import extraction, extraction_arrow
+    from tackle4losscontentextraction_spark.operators import extraction
     from tackle4losscontentextraction_spark.session import get_spark
     from tackle4losscontentextraction_spark.sources import synth
 
@@ -112,30 +112,26 @@ def run_extract(n_docs: int, tag: str, reps: int = 4) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     big = synth.synth_docs(spark, n_docs, partitions=max(4 * CPUS, 64)).cache()
     big.count()
-    best = {"catalyst": 1e18, "arrow": 1e18}
-    impls = {"catalyst": extraction.extract, "arrow": extraction_arrow.extract_arrow}
+    spark.sparkContext.setJobDescription("bench_extra:extract")
+    best = 1e18
     for _ in range(reps):
-        for name, fn in impls.items():
-            spark.sparkContext.setJobDescription(f"bench_extra:extract:{name}")
-            t0 = time.perf_counter()
-            fn(big).agg(SF.count("*"), SF.sum("content_chars")).collect()
-            best[name] = min(best[name], time.perf_counter() - t0)
-            print(name, round(time.perf_counter() - t0, 3), "load", _load1(), flush=True)
+        t0 = time.perf_counter()
+        extraction.extract(big).agg(SF.count("*"), SF.sum("content_chars")).collect()
+        sec = time.perf_counter() - t0
+        best = min(best, sec)
+        print("extract", round(sec, 3), "load", _load1(), flush=True)
     out = {
         "n_docs": n_docs, "cpus": CPUS, "tag": tag, "load_1min": _load1(),
-        "catalyst_sec": round(best["catalyst"], 3),
-        "arrow_sec": round(best["arrow"], 3),
-        "docs_per_sec_best": round(n_docs / min(best.values()), 1),
+        "extract_sec": round(best, 3),
+        "docs_per_sec_best": round(n_docs / best, 1),
     }
     plan_dir = os.path.join(REPO, "plans", "r06")
     os.makedirs(plan_dir, exist_ok=True)
-    for name, fn in impls.items():
-        df = fn(big)
-        plan_str = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-        with open(os.path.join(plan_dir, f"extract_{name}_{tag}.txt"), "w") as f:
-            f.write(plan_str)
+    plan_str = extraction.extract(big)._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    with open(os.path.join(plan_dir, f"extract_{tag}.txt"), "w") as f:
+        f.write(plan_str)
     spark.stop()
     with open(os.path.join(REPO, "BENCH", f"r06_extract_{tag}.json"), "w") as f:
         json.dump(out, f, indent=1)

@@ -36,8 +36,6 @@ def main() -> int:
     ap.add_argument("--output", required=True)
     ap.add_argument("--lineage", required=True)
     ap.add_argument("--buckets", type=int, default=16)
-    ap.add_argument("--arrow", action="store_true",
-                    help="use the mapInPandas extraction path")
     ap.add_argument("--html", action="store_true",
                     help="input is raw HTML (doc_id, url, lang, html): "
                          "DOM-tokenize to spans before extraction")
@@ -48,7 +46,7 @@ def main() -> int:
     spark = SparkSession.builder.appName("t4l-extraction").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    from tackle4losscontentextraction_spark.operators import extraction, extraction_arrow
+    from tackle4losscontentextraction_spark.operators import extraction
     from tackle4losscontentextraction_spark.plans import pipeline
     from tackle4losscontentextraction_spark.sources import lineage, synth
 
@@ -67,9 +65,8 @@ def main() -> int:
         )
     else:
         docs = synth.docs_from_documents(raw)
-    transform = extraction_arrow.extract_arrow if args.arrow else extraction.extract
     result = lineage.run_with_resume(
-        spark, docs, transform, args.output, args.lineage, n_buckets=args.buckets
+        spark, docs, extraction.extract, args.output, args.lineage, n_buckets=args.buckets
     )
     extracted = spark.read.parquet(args.output)
     m = pipeline.metrics(extracted).collect()[0].asDict()

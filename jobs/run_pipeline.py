@@ -5,7 +5,7 @@ clean/classify -> DB update -> embed -> vector insert) as ONE resumable
 job, composed from the library stages:
 
     docs(doc_id, url, lang, spans | html)     [scan; --html DOM-tokenizes]
-      -> extraction.extract[_arrow]           [F1,F2,F5,L2,L3,C1: one projection]
+      -> extraction.extract                   [F1,F2,F5,L2,L3,C1: one mapInArrow pass]
       -> write extracted (bucketed, lineage)  [kill/rerun resumes pending buckets]
       -> R5 gate: error rows stop here        [status-column filter, no exception]
       -> main_content join + hash embedding   [A1 + L4, L2-normalized]
@@ -30,7 +30,7 @@ manual cleanup for the same property (``lock_manager.py:13``).
         --py-files /tmp/t4l.zip \
         jobs/run_pipeline.py \
         --input /root/testdata/sf0.01/documents.parquet \
-        --workdir /tmp/t4l_pipeline --buckets 16 [--arrow] [--html] [--cluster]
+        --workdir /tmp/t4l_pipeline --buckets 16 [--html] [--cluster]
 
 Workdir layout:
     extracted/   bucketed extraction output (resume unit)
@@ -55,8 +55,6 @@ def main() -> int:
     ap.add_argument("--input", required=True, help="documents parquet path")
     ap.add_argument("--workdir", required=True)
     ap.add_argument("--buckets", type=int, default=16)
-    ap.add_argument("--arrow", action="store_true",
-                    help="use the mapInPandas extraction path")
     ap.add_argument("--html", action="store_true",
                     help="input is raw HTML (doc_id, url, lang, html)")
     ap.add_argument("--spans", action="store_true",
@@ -75,11 +73,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("WARN")
 
     from tackle4losscontentextraction_spark.functions import embeddings as emb_fn
-    from tackle4losscontentextraction_spark.operators import (
-        extraction,
-        extraction_arrow,
-        merge,
-    )
+    from tackle4losscontentextraction_spark.operators import extraction, merge
     from tackle4losscontentextraction_spark.plans import pipeline
     from tackle4losscontentextraction_spark.sources import lineage, synth
 
@@ -109,9 +103,8 @@ def main() -> int:
         docs = raw.select("doc_id", "url", "lang", "spans")
     else:
         docs = synth.docs_from_documents(raw)
-    transform = extraction_arrow.extract_arrow if args.arrow else extraction.extract
     resume = lineage.run_with_resume(
-        spark, docs, transform, extracted_dir, lineage_dir,
+        spark, docs, extraction.extract, extracted_dir, lineage_dir,
         n_buckets=args.buckets)
     _mark("extract_write")
 

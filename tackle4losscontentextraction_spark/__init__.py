@@ -19,10 +19,10 @@ This package re-expresses every stage as declarative DataFrame dataflow:
 - ``streaming``  : Structured Streaming ingest wrapper for the same
                    extraction operator.
 
-Design stance (scale-first): the core extraction path is a pure per-row
-projection built from higher-order array functions — it never shuffles,
-stays entirely inside whole-stage codegen, and therefore scales linearly
-with executors. Shuffling operators (dedup, clustering, similarity) use
+Design stance (scale-first): the core extraction path is one row-local
+``mapInArrow`` pass (RE2 batch cleaning in Arrow, the per-span walk in
+Python workers) — it never shuffles, and therefore scales linearly with
+executors. Shuffling operators (dedup, clustering, similarity) use
 broadcast joins for small sides, salting for skew, and AQE.
 """
 

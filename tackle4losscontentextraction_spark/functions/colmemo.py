@@ -1,7 +1,6 @@
 """Process-wide memo for immutable Column fragments.
 
-Same device as ``operators/extraction._COLS_MEMO`` and
-``sources/synth._COLS_MEMO``, made shareable: a Column is an immutable,
+Same device as ``sources/synth._COLS_MEMO``, made shareable: a Column is an immutable,
 name-bound plan fragment, so rebuilding an identical one on every query
 invocation only repeats hundreds of py4j round trips (measured 0.3-1.0 s
 per build for the dedup/ANN trees — construction, not Catalyst, dominated

@@ -1,6 +1,7 @@
-"""Classifier-confidence coercion (reference extractContent.py:426-433,
-453-454): float(x) else 0.0, NaN -> 0.0, clamp to [0,1], and floor 0.5
-when the type is empty_content/wrong_content."""
+"""Classifier-confidence coercion (reference extractContent.py:426-433):
+float(x) else 0.0, NaN -> 0.0, clamp to [0,1]. The extraction operator
+applies the same clamp, plus the 0.5 floor for empty_content /
+wrong_content (ref :453-454), inside its Arrow pass."""
 
 from __future__ import annotations
 
@@ -12,9 +13,3 @@ def coerce_confidence(col: Column) -> Column:
     c = col.try_cast("double")
     c = F.coalesce(F.when(F.isnan(c), F.lit(0.0)).otherwise(c), F.lit(0.0))
     return F.least(F.greatest(c, F.lit(0.0)), F.lit(1.0))
-
-
-def apply_confidence_floor(conf: Column, content_type: Column) -> Column:
-    """Floor 0.5 for empty_content / wrong_content (ref :453-454)."""
-    needs_floor = content_type.isin("empty_content", "wrong_content")
-    return F.when(needs_floor, F.greatest(conf, F.lit(0.5))).otherwise(conf)

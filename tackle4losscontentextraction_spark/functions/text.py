@@ -35,23 +35,6 @@ def clean_text(col: Column) -> Column:
     return c
 
 
-def word_count(cleaned: Column) -> Column:
-    """Whitespace-token count of an already-collapsed string."""
-    return F.when(F.length(cleaned) == 0, F.lit(0)).otherwise(
-        F.length(cleaned) - F.length(F.replace(cleaned, F.lit(" "), F.lit(""))) + 1
-    )
-
-
-def link_density(raw: Column) -> Column:
-    """Fraction of raw characters inside markdown links.
-
-    Mirrors the reference's ``exclude_external_links`` heuristic
-    (extractContent.py:273): link-heavy blocks are boilerplate.
-    """
-    matched = F.length(raw) - F.length(F.regexp_replace(raw, spec.RE_MD_LINK, ""))
-    return matched.cast("double") / F.greatest(F.length(raw), F.lit(1)).cast("double")
-
-
 def strip_and_truncate(col: Column, max_len: int) -> Column:
     """Strip tags, collapse whitespace, truncate (extractContent.py:419-424).
 
@@ -60,19 +43,6 @@ def strip_and_truncate(col: Column, max_len: int) -> Column:
     c = F.regexp_replace(col, spec.RE_HTML_TAG, " ")
     c = F.trim(F.regexp_replace(c, spec.RE_WS, " "))
     return F.substring(c, 1, max_len)
-
-
-def is_error_text(col: Column) -> Column:
-    """Extraction-failure predicate (article_processor.py:53)."""
-    pred = F.lit(False)
-    for p in spec.ERROR_PREFIXES:
-        pred = pred | col.startswith(p)
-    return pred
-
-
-def inline_image_url(raw: Column) -> Column:
-    """First inline markdown-image URL in a raw span text ('' if none)."""
-    return F.regexp_extract(raw, spec.RE_MD_IMAGE_URL, 1)
 
 
 # common HTML entities (templates utils.py:31-40 analog); JVM-side

@@ -383,7 +383,7 @@ LEFT JOIN (
   FROM expanded
   -- kind-based filter to match the Spark predicate exactly: a
   -- degenerate media span with an EMPTY ref must still be excluded
-  -- (extraction.py:191-193 pitfall, found by property testing)
+  -- (a pitfall found by property testing)
   WHERE kind NOT IN ({_MEDIA_IN}) GROUP BY did
 ) m ON m.did = db.did
 """,

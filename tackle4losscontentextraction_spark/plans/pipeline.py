@@ -4,7 +4,7 @@ scripts/cleanup_pipeline.py — SURVEY §3.1) plus per-partition metrics.
 One lineage:
 
     docs(doc_id, url, lang, spans)              [scan]
-      -> extraction.extract                     [per-row projection]
+      -> extraction.extract                     [one mapInArrow pass]
       -> write extracted parquet (bucketed)     [resume via lineage]
       -> metrics aggregate                      [A7]
 

@@ -115,17 +115,7 @@ def q_extract_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_extract_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..barrier import barrier
-
-    # barrier: HashAggregate does no common-subexpression elimination,
-    # so grouping directly on the derived columns would inline the full
-    # extraction tree into every aggregate input (measured 71s -> ~3s).
-    out = barrier(
-        _extracted(spark, sf_dir).select(
-            "content_type", "error", "spans_in", "spans_kept", "content_chars"
-        )
-    )
-    return out.groupBy("content_type").agg(
+    return _extracted(spark, sf_dir).groupBy("content_type").agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.sum("spans_in").cast("bigint").alias("spans_in"),
         F.sum("spans_kept").cast("bigint").alias("spans_kept"),

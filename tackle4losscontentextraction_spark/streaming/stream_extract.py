@@ -6,10 +6,11 @@ operator applied to a file stream, giving continuous ingest with
 exactly-once file-source semantics and checkpoint-based resume (the
 streaming twin of sources/lineage.py).
 
-Because ``operators.extraction.extract`` is a pure per-row projection,
-it is trivially streamable — no watermark needed for the stateless
-path. ``windowed_metrics`` adds the stateful example: per-window
-content-type counts with a watermark for late data.
+Because ``operators.extraction.extract`` is one row-local
+``mapInArrow`` pass (each output row depends on its input row only), it
+is trivially streamable — no watermark needed for the stateless path.
+``windowed_metrics`` adds the stateful example: per-window content-type
+counts with a watermark for late data.
 """
 
 from __future__ import annotations

@@ -24,9 +24,8 @@ def test_extraction_is_shuffle_free(spark):
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     )
     plan = extraction.extract(docs)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, "extraction must stay a per-row projection"
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, \
-        "default extraction path must not spawn Python workers"
+    assert "Exchange" not in plan, "extraction must stay shuffle-free"
+    assert plan.count("MapInArrow") == 1, "extraction must be ONE Arrow pass"
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -51,17 +50,14 @@ def test_small_dim_join_broadcasts(spark):
 
 
 def test_extraction_aggregate_does_not_duplicate_regex(spark):
-    """The barrier before HashAggregate must keep the clean-text chain
-    out of the aggregate expressions (regression for the 71s plan)."""
+    """The clean-text chain runs inside the one Arrow pass: no
+    regexp_replace may reach the plan, where a HashAggregate (no
+    common-subexpression elimination) would inline it into every
+    aggregate input (regression for the 71s plan)."""
     from tackle4losscontentextraction_spark.plans.queries import SPARK_QUERIES
 
     df = SPARK_QUERIES["extract_metrics"](spark, "/root/testdata/sf0.001")
-    plan = _optimized(df)
-    agg_part = plan.split("Aggregate")[0] if "Aggregate" in plan else ""
-    # the aggregate operators sit above the barrier Filter; no
-    # regexp_replace may appear above it
-    above_filter = plan.split("__collapse_barrier__")[0]
-    assert "regexp_replace" not in above_filter
+    assert "regexp_replace" not in _optimized(df)
 
 
 def test_jaccard_guard_single_pass(spark):

@@ -34,21 +34,6 @@ def test_clean_text(spark, raw, expected):
     assert _one(spark, text_fn.clean_text(F.col("s")), s=raw) == expected
 
 
-def test_word_count_and_link_density(spark):
-    assert _one(spark, text_fn.word_count(F.col("s")), s="a b c") == 3
-    assert _one(spark, text_fn.word_count(F.col("s")), s="") == 0
-    # link markdown '[linky](u)' is 10 of 20 chars
-    d = _one(spark, text_fn.link_density(F.col("s")), s="hello [linky](u) bye")
-    assert d == pytest.approx(10 / 20)
-    assert _one(spark, text_fn.link_density(F.col("s")), s="plain") == 0.0
-
-
-def test_error_predicate(spark):
-    assert _one(spark, text_fn.is_error_text(F.col("s")), s="Extraction error: x")
-    assert _one(spark, text_fn.is_error_text(F.col("s")), s="Failed to extract content")
-    assert not _one(spark, text_fn.is_error_text(F.col("s")), s="fine text")
-
-
 @pytest.mark.parametrize(
     "raw,expected",
     [("0.9", 0.9), ("x", 0.0), ("1.7", 1.0), ("-0.2", 0.0)],
@@ -68,17 +53,6 @@ def test_confidence_null(spark):
     df = spark.sql("select cast(null as string) as s")
     v = df.select(conf_fn.coerce_confidence(F.col("s")).alias("v")).collect()[0].v
     assert v == 0.0
-
-
-def test_confidence_floor(spark):
-    v = _one(
-        spark,
-        conf_fn.apply_confidence_floor(F.lit(0.2), F.col("t")),
-        t="empty_content",
-    )
-    assert v == 0.5
-    v = _one(spark, conf_fn.apply_confidence_floor(F.lit(0.2), F.col("t")), t="news_article")
-    assert v == pytest.approx(0.2)
 
 
 def test_url_normalize(spark):

@@ -105,8 +105,7 @@ def bench_offline(sizes: list[int], reps: int = 3) -> list[dict]:
 def bench_spark(n_docs: int, size: int) -> dict:
     from pyspark.sql import functions as F
 
-    from tackle4losscontentextraction_spark.operators import (extraction_arrow,
-                                                              multimodal)
+    from tackle4losscontentextraction_spark.operators import extraction, multimodal
     from tackle4losscontentextraction_spark.session import get_spark
     from tackle4losscontentextraction_spark.sources import synth
 
@@ -115,7 +114,7 @@ def bench_spark(n_docs: int, size: int) -> dict:
     spark.sparkContext.setLogLevel("ERROR")
     docs = synth.synth_docs(spark, n_docs, partitions=max(cpus, 16)).cache()
     docs.count()
-    out = extraction_arrow.extract_arrow(docs)
+    out = extraction.extract(docs)
     media = multimodal.synth_jpeg_payloads(
         multimodal.synth_media_table(out), width=size, height=size
     ).cache()

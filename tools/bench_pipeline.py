@@ -187,8 +187,7 @@ def main() -> None:
     # Keep every run (they're ~20 lines each), plus two best views:
     #   best_throughput — the run with the fastest cold full leg
     #   best_resume     — the run with the lowest kill+resume overhead
-    # Top-level flat fields mirror best_throughput for older consumers
-    # (harvest's staleness check reads load_full at the top level).
+    # Top-level flat fields mirror best_throughput for older consumers.
     runs: list[dict] = []
     try:
         with open(path) as f:
